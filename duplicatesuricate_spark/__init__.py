@@ -10,8 +10,8 @@ A from-scratch recast of the query semantics of ``fpli-mbr/duplicatesuricate``
     large-star/small-star connected components -> assignments/pairs/metrics
 
 Everything is DataFrame/Catalyst-first; Python appears only inside
-Arrow-batched pandas UDFs (sketching) and per-partition kernels
-(exact-substring verification).
+Arrow-batched kernels (the ``mapInArrow`` sketch pass) and per-partition
+kernels (exact-substring verification).
 """
 
 from duplicatesuricate_spark.config import DedupConfig, DEFAULT_CONFIG

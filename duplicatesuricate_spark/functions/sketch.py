@@ -3,8 +3,10 @@
 The reference's similarity channel is per-row Python fuzzywuzzy
 (duplicatesuricate/utils.py:99-113, 187-201, registered as row-at-a-time
 Spark UDFs at utils.py:116,204).  The recast replaces it with sketches
-computed in ONE Arrow-batched pandas UDF over the shingle arrays —
-vectorized numpy inside, zero per-row Python (BASELINE.json input_hint).
+computed in ONE ``mapInArrow`` pass over the raw content bytes
+(:func:`with_full_sketches`): tokenization, k-gram shingles, MinHash,
+SimHash and the substring pass's chunk hashes are all vectorized numpy
+over the Arrow batch, with zero per-row Python (BASELINE.json input_hint).
 
 MinHash family: multiply-shift universal hashing on uint64 —
 ``h_i(x) = (a_i * x + b_i) mod 2^64 >> 33`` with odd seeded ``a_i``.
@@ -22,16 +24,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from duplicatesuricate_spark.config import DedupConfig, DEFAULT_CONFIG
-
-_SKETCH_SCHEMA = T.StructType([
-    T.StructField("minhash", T.ArrayType(T.IntegerType(), False), False),
-    T.StructField("simhash", T.LongType(), False),
-])
 
 
 def _perm_constants(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
@@ -45,88 +40,6 @@ def _perm_constants(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     b = (hi << np.uint64(32)) | lo
     return a, b
 
-
-def _sketch_batch(
-    shingle_lists: pd.Series, a: np.ndarray, b: np.ndarray, num_perms: int
-) -> pd.DataFrame:
-    """Vectorized over the whole Arrow batch: flatten every doc's shingles
-    into one array, hash per-perm, segment-reduce mins with
-    ``np.minimum.reduceat`` — no per-row Python loop over shingles."""
-    lens = shingle_lists.map(len).to_numpy(dtype=np.int64)
-    n_docs = len(lens)
-    if n_docs == 0:
-        return pd.DataFrame({"minhash": [], "simhash": []})
-    # empty shingle sets get one sentinel shingle so reduceat stays aligned
-    safe = np.maximum(lens, 1)
-    starts = np.concatenate(([0], np.cumsum(safe)[:-1]))
-    flat = np.empty(int(safe.sum()), dtype=np.uint64)
-    for i, lst in enumerate(shingle_lists):
-        s = starts[i]
-        if len(lst):
-            flat[s : s + len(lst)] = np.asarray(lst, dtype=np.int64).view(np.uint64)
-        else:
-            flat[s] = np.uint64(0)
-
-    # --- MinHash: per-perm multiply-shift, segmented min.  In-place ops on
-    # one reused buffer: allocation churn (not CPU) is what breaks scaling
-    # when 32 tasks run this concurrently ---
-    mins = np.empty((num_perms, n_docs), dtype=np.int32)
-    buf = np.empty_like(flat)
-    for p in range(num_perms):
-        np.multiply(flat, a[p], out=buf)
-        np.add(buf, b[p], out=buf)
-        np.right_shift(buf, np.uint64(33), out=buf)
-        mins[p] = np.minimum.reduceat(buf, starts).astype(np.int32)
-    minhash = list(np.ascontiguousarray(mins.T))
-
-    # --- SimHash: per-bit segmented popcount with an O(n) buffer (NEVER
-    # the (n, 64) matrix — that is gigabytes per wide batch) ---
-    ones = np.empty((64, n_docs), dtype=np.int64)
-    for bit in range(64):
-        np.right_shift(flat, np.uint64(bit), out=buf)
-        np.bitwise_and(buf, np.uint64(1), out=buf)
-        ones[bit] = np.add.reduceat(buf.view(np.int64), starts)
-    sig_bits = (2 * ones > safe[None, :]).astype(np.uint64)   # (64, n_docs)
-    shifts = np.arange(64, dtype=np.uint64)
-    simhash = (sig_bits << shifts[:, None]).sum(axis=0, dtype=np.uint64).view(np.int64)
-
-    return pd.DataFrame({"minhash": minhash, "simhash": simhash})
-
-
-def make_sketch_udf(cfg: DedupConfig = DEFAULT_CONFIG):
-    a, b = _perm_constants(cfg)
-    num_perms = cfg.num_perms
-
-    @pandas_udf(_SKETCH_SCHEMA)
-    def sketch(shingles: pd.Series) -> pd.DataFrame:
-        return _sketch_batch(shingles, a, b, num_perms)
-
-    return sketch
-
-
-def with_sketches(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
-    """shingles array<long> -> + minhash array<int>, simhash long."""
-    sk = make_sketch_udf(cfg)(F.col("shingles"))
-    return (
-        df.withColumn("_sk", sk)
-        .withColumn("minhash", F.col("_sk.minhash"))
-        .withColumn("simhash", F.col("_sk.simhash"))
-        .drop("_sk")
-    )
-
-
-# ------------------------------------------------- fused full-sketch path
-
-_FULL_SCHEMA = T.StructType([
-    T.StructField("shingles", T.ArrayType(T.LongType(), False), False),
-    T.StructField("minhash", T.ArrayType(T.IntegerType(), False), False),
-    T.StructField("simhash", T.LongType(), False),
-])
-
-_FULL_SCHEMA_CHUNKS = T.StructType(
-    _FULL_SCHEMA.fields
-    + [T.StructField("chunks", T.ArrayType(T.LongType(), False), False)]
-)
 
 # odd multipliers + finalizer for the vectorized k-gram hash
 _GRAM_C = np.array(
@@ -293,18 +206,12 @@ def _tokenize_hash_np(contents: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     controls), while this path is register/bandwidth-bound numpy.
 
     NOTE: the per-doc ``encode``+``join`` below still materializes one
-    Python bytes object per doc; the pipeline hot path avoids this module
-    entirely via :func:`_tokenize_hash_arrow` (zero-copy Arrow offsets).
-    This form remains for pandas-Series callers and as the oracle twin.
+    Python bytes object per doc; the pipeline kernel uses
+    :func:`_tokenize_hash_arrow` (zero-copy Arrow offsets) instead.  This
+    form remains as the in-process twin that tests check the kernel with.
     """
     n_docs = len(contents)
-    first = contents.iloc[0] if n_docs else b""
-    if isinstance(first, (bytes, bytearray)):
-        # BinaryType input: the JVM did one encode per doc; zero
-        # Python-side string materialization here
-        encoded = contents
-    else:
-        encoded = [s.encode("utf-8", "surrogatepass") for s in contents]
+    encoded = [s.encode("utf-8", "surrogatepass") for s in contents]
     doc_blens = np.fromiter((len(e) for e in encoded), dtype=np.int64,
                             count=n_docs)
     buf = np.frombuffer(b"\x00".join(encoded) + b"\x00", dtype=np.uint8)
@@ -415,73 +322,6 @@ def tokenize_hash_py(content: str) -> list[int]:
     return out
 
 
-def make_full_sketch_udf(cfg: DedupConfig = DEFAULT_CONFIG, with_chunks: bool = False):
-    """token_hashes array<long> -> struct(shingles, minhash, simhash
-    [, chunks]).
-
-    The ONLY JVM-side text work left is one xxhash64 per token; k-gram
-    hashing, per-doc dedup, MinHash, SimHash — and, with ``with_chunks``,
-    the exact-substring pass's anchored chunk hashes — all run vectorized
-    in numpy over the whole Arrow batch.  This exists because interpreted
-    higher-order-function evaluation of per-gram expressions is memory-
-    latency-bound and stops scaling past a few cores; the numpy kernel
-    streams linearly.
-
-    ``with_chunks`` replaces the old ``keep_token_hashes`` design: instead
-    of persisting the full per-token hash array (~8 bytes/token, the
-    sketch table's biggest column) so the substring pass can chunk later,
-    the ~n/anchor_mod chunk hashes are derived HERE, in the same pass —
-    ~16x fewer bytes persisted and shuffled for the same downstream
-    information, paid for with extra (perfectly parallel) vector math.
-    """
-    a, b = _perm_constants(cfg)
-    schema = _FULL_SCHEMA_CHUNKS if with_chunks else _FULL_SCHEMA
-
-    @pandas_udf(schema)
-    def full_sketch(token_hashes: pd.Series) -> pd.DataFrame:
-        n_docs = len(token_hashes)
-        if n_docs == 0:
-            return _empty_sketch_frame(with_chunks)
-        lens = token_hashes.map(len).to_numpy(dtype=np.int64)
-        flat = np.empty(int(lens.sum()), dtype=np.uint64)
-        pos = 0
-        for lst in token_hashes:
-            m = len(lst)
-            if m:
-                flat[pos : pos + m] = np.asarray(lst, dtype=np.int64).view(np.uint64)
-            pos += m
-        return _sketch_from_flat(flat, lens, cfg, a, b, with_chunks)
-
-    return full_sketch
-
-
-def make_content_sketch_udf(cfg: DedupConfig = DEFAULT_CONFIG,
-                            with_chunks: bool = False):
-    """content string -> struct(shingles, minhash, simhash [, chunks]) —
-    the fully-fused form: tokenization, token hashing, k-gram shingles,
-    MinHash, SimHash and substring chunks ALL inside one vectorized numpy
-    pass over the Arrow batch.  The JVM side ships raw content bytes and
-    nothing else (see _tokenize_hash_np for why this beats codegen
-    ``split(lower(...))`` on allocation-constrained hosts)."""
-    a, b = _perm_constants(cfg)
-    schema = _FULL_SCHEMA_CHUNKS if with_chunks else _FULL_SCHEMA
-
-    @pandas_udf(schema)
-    def content_sketch(contents: pd.Series) -> pd.DataFrame:
-        if len(contents) == 0:
-            return _empty_sketch_frame(with_chunks)
-        flat, lens = _tokenize_hash_np(contents)
-        return _sketch_from_flat(flat, lens, cfg, a, b, with_chunks)
-
-    return content_sketch
-
-
-def _empty_sketch_frame(with_chunks: bool) -> pd.DataFrame:
-    out = {"shingles": [], "minhash": [], "simhash": []}
-    if with_chunks:
-        out["chunks"] = []
-    return pd.DataFrame(out)
-
 
 def _segment_unique(
     vals: np.ndarray, doc_idx: np.ndarray, n_docs: int
@@ -508,7 +348,10 @@ def _minhash_simhash_segments(
 ) -> tuple[np.ndarray, np.ndarray]:
     """MinHash + SimHash over segment-grouped shingles (every segment must
     be non-empty).  Returns (mins (num_perms, n_docs) int32, simhash int64).
-    Same arithmetic as :func:`_sketch_batch`, minus the list plumbing."""
+    In-place ops on one reused buffer: allocation churn (not CPU) is what
+    breaks scaling when many tasks run this concurrently.  SimHash is a
+    per-bit segmented popcount with an O(n) buffer, never the (n, 64)
+    matrix (gigabytes per wide batch)."""
     n_docs = len(lens)
     if n_docs == 0:
         return (np.empty((num_perms, 0), dtype=np.int32),
@@ -577,26 +420,6 @@ def _sketch_segments(
     return out
 
 
-def _sketch_from_flat(
-    flat: np.ndarray, lens: np.ndarray, cfg: DedupConfig,
-    a: np.ndarray, b: np.ndarray, with_chunks: bool,
-) -> pd.DataFrame:
-    """pandas adapter over :func:`_sketch_segments` (the pandas-UDF paths;
-    the pipeline hot path uses the Arrow-native adapter instead)."""
-    seg = _sketch_segments(flat, lens, cfg, a, b, with_chunks)
-    sh64 = seg["sh_vals"].view(np.int64)
-    cuts = np.cumsum(seg["sh_lens"])[:-1]
-    out = {
-        "shingles": np.split(sh64, cuts),
-        "minhash": list(np.ascontiguousarray(seg["mins"].T)),
-        "simhash": seg["simhash"],
-    }
-    if with_chunks:
-        ch64 = seg["ch_vals"].view(np.int64)
-        out["chunks"] = np.split(ch64, np.cumsum(seg["ch_lens"])[:-1])
-    return pd.DataFrame(out)
-
-
 def _sketch_arrow_arrays(seg: dict, cfg: DedupConfig, with_chunks: bool):
     """Segment-form kernel output -> Arrow arrays, zero-copy: ListArray
     offsets + values are built straight from the numpy flats — no per-doc
@@ -629,22 +452,23 @@ def _sketch_arrow_arrays(seg: dict, cfg: DedupConfig, with_chunks: bool):
     return arrs
 
 
-def sketch_map_in_arrow(
-    df: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    content_col: str = "content",
-    with_chunks: bool = False,
-    project: list[str] | None = None,
-) -> DataFrame:
-    """content -> shingles/minhash/simhash[/chunks] via ``mapInArrow`` —
-    the fully zero-copy hot path.
+def with_full_sketches(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
+                       content_col: str = "content",
+                       with_chunks: bool = False,
+                       project: list[str] | None = None) -> DataFrame:
+    """content -> shingles + minhash + simhash [+ chunks] in one
+    ``mapInArrow`` pass — the pipeline's only sketch kernel.
 
     Input bytes are consumed straight from the Arrow string buffers
     (:func:`_tokenize_hash_arrow`) and outputs are built as Arrow arrays
     from numpy flats (:func:`_sketch_arrow_arrays`): the ONLY Python
     objects per batch are a handful of array headers, vs one bytes object
-    per doc on the pandas path — the measured ~170 s serial allocation
-    term at 1M docs (BENCH/BASELINE.md).
+    per doc on a pandas-Series path — the measured ~170 s serial
+    allocation term at 1M docs (BENCH/BASELINE.md).
+
+    ``with_chunks`` adds the exact-substring pass's anchored chunk hashes
+    (stage B9) as a ``chunks array<long>`` column, derived in the same
+    pass so the substring stage never re-tokenizes the corpus.
 
     ``project`` selects which input columns to carry into the output
     (default: all of them, ``content_col`` included).  The pipeline passes
@@ -672,82 +496,18 @@ def sketch_map_in_arrow(
     in_by_name = {f.name: f for f in df.schema.fields}
     out_schema = T.StructType([in_by_name[c] for c in keep] + new_fields)
     out_names = keep + [f.name for f in new_fields]
-    with_chunks_ = with_chunks
 
     def fn(batches):
         for batch in batches:
             col = batch.column(batch.schema.get_field_index(content_col))
             flat, lens = _tokenize_hash_arrow(col)
-            seg = _sketch_segments(flat, lens, cfg, a, b, with_chunks_)
+            seg = _sketch_segments(flat, lens, cfg, a, b, with_chunks)
             arrs = [
                 batch.column(batch.schema.get_field_index(c)) for c in keep
-            ] + _sketch_arrow_arrays(seg, cfg, with_chunks_)
+            ] + _sketch_arrow_arrays(seg, cfg, with_chunks)
             yield pa.RecordBatch.from_arrays(arrs, names=out_names)
 
     return df.mapInArrow(fn, out_schema)
-
-
-def with_full_sketches(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
-                       content_col: str = "content",
-                       keep_token_hashes: bool = False,
-                       with_chunks: bool = False,
-                       kernel_tokenize: bool | None = None,
-                       project: list[str] | None = None) -> DataFrame:
-    """content -> shingles + minhash + simhash [+ chunks] in one Arrow pass
-    (the pipeline's hot path).
-
-    ``kernel_tokenize`` (default: cfg.kernel_tokenize) moves tokenization
-    itself into the numpy kernel — the JVM ships raw content and nothing
-    else.  Measured on this class of host, codegen ``split(lower(...))``
-    is allocation-bound and stops scaling past ~2 cores while the
-    vectorized char path stays register/bandwidth-bound
-    (BENCH/BASELINE.md).  The JVM form is kept for ``keep_token_hashes``
-    consumers and as the cross-engine-readable reference semantics.
-
-    ``with_chunks`` adds the exact-substring pass's anchored chunk hashes
-    (stage B9) as a ``chunks array<long>`` column — ~16x fewer bytes than
-    ``keep_token_hashes`` (which retains the full per-token ``th`` array)
-    for the same downstream use; prefer it on the pipeline path."""
-    from duplicatesuricate_spark.functions.text import tokens_expr
-
-    if kernel_tokenize is None:
-        kernel_tokenize = getattr(cfg, "kernel_tokenize", False)
-    if kernel_tokenize and not keep_token_hashes:
-        if getattr(cfg, "arrow_zero_copy", True):
-            # the hot path: mapInArrow, zero per-doc Python objects in
-            # either direction (round-3 lever — see sketch_map_in_arrow)
-            return sketch_map_in_arrow(
-                df, cfg, content_col=content_col, with_chunks=with_chunks,
-                project=project,
-            )
-        # legacy pandas-Series form, kept for A/B probes: one bytes
-        # object per doc at the Arrow boundary
-        out = make_content_sketch_udf(cfg, with_chunks=with_chunks)(
-            F.col(content_col)
-        )
-        res = df.withColumn("_sk", out)
-    else:
-        th = F.transform(tokens_expr(content_col, cfg), lambda t: F.xxhash64(t))
-        out = make_full_sketch_udf(cfg, with_chunks=with_chunks)(F.col("th"))
-        res = df.withColumn("th", th).withColumn("_sk", out)
-    res = (
-        res.withColumn("shingles", F.col("_sk.shingles"))
-        .withColumn("minhash", F.col("_sk.minhash"))
-        .withColumn("simhash", F.col("_sk.simhash"))
-    )
-    if with_chunks:
-        res = res.withColumn("chunks", F.col("_sk.chunks"))
-    res = res.drop("_sk")
-    if not keep_token_hashes and "th" in res.columns:
-        res = res.drop("th")
-    if project is not None:
-        sketch_cols = ["shingles", "minhash", "simhash"]
-        if with_chunks:
-            sketch_cols.append("chunks")
-        if keep_token_hashes:
-            sketch_cols.append("th")
-        res = res.select(*project, *sketch_cols)
-    return res
 
 
 # ---------------------------------------------------------------- oracles
@@ -757,7 +517,7 @@ def minhash_simhash_py(
     shingles: list[int], cfg: DedupConfig = DEFAULT_CONFIG
 ) -> tuple[list[int], int]:
     """Pure-Python (bigint) reimplementation used only by tests to pin the
-    UDF's arithmetic: mod-2^64 multiply-shift, independent of numpy."""
+    kernel's arithmetic: mod-2^64 multiply-shift, independent of numpy."""
     a, b = _perm_constants(cfg)
     xs = [x & 0xFFFFFFFFFFFFFFFF for x in shingles] or [0]
     mh = []

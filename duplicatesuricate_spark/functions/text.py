@@ -1,16 +1,17 @@
-"""Normalization, tokenization and shingling (stage B2) — pure Catalyst.
+"""Normalization and tokenization (stage B2).
 
 Replaces the reference's deleted ``preprocessing.py`` (ASCII-lowercase +
 stopword normalization; see SURVEY.md preamble) and the tokenizer inside its
-token-set kernel (duplicatesuricate/utils.py:187-201) with code-aware,
-set-at-a-time column expressions: lowercase, split on non-identifier
-characters, 5-gram token shingles, each shingle hashed to int64 with
-``xxhash64``.  Everything here stays inside whole-stage codegen — no UDFs.
+token-set kernel (duplicatesuricate/utils.py:187-201) with code-aware
+rules: lowercase, split on non-identifier characters, 5-gram token
+shingles.  The pipeline tokenizes and shingles inside the Arrow sketch
+kernel (``functions.sketch``); this module keeps the Catalyst tokenizer
+for the raw-content substring path and the pure-Python shingle oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from duplicatesuricate_spark.config import DedupConfig, DEFAULT_CONFIG
@@ -25,52 +26,10 @@ def tokens_expr(content: Column | str, cfg: DedupConfig = DEFAULT_CONFIG) -> Col
     )
 
 
-def shingles_expr(tokens: Column, cfg: DedupConfig = DEFAULT_CONFIG) -> Column:
-    """Hashed k-gram token shingles, as a distinct set (array<long>).
-
-    Documents shorter than k tokens contribute one shingle over all their
-    tokens, so short files still sketch deterministically instead of
-    vanishing.  ``xxhash64(concat_ws(' ', gram))`` is the shingle hash —
-    JVM-side, seeded by Spark's fixed default seed (42), fully deterministic.
-    """
-    k = cfg.shingle_k
-    n = F.size(tokens)
-    grams = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tokens, i, k))),
-        ),
-    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", tokens))))
-    return F.array_distinct(grams)
-
-
-def with_tokens(df: DataFrame, content_col: str = "content",
-                cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
-    return df.withColumn("tokens", tokens_expr(content_col, cfg))
-
-
-def with_shingles(df: DataFrame, content_col: str = "content",
-                  cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
-    """content -> shingles array<long>; drops the intermediate token array.
-
-    The token array is MATERIALIZED as its own column first: Catalyst
-    inlines expressions referenced inside higher-order-function lambdas,
-    so composing ``shingles_expr(tokens_expr(...))`` directly would
-    re-tokenize the full document once per gram — quadratic per row and
-    interpreted (HOFs don't codegen).  Two projections keep tokenization
-    linear."""
-    return (
-        df.withColumn("__tokens", tokens_expr(content_col, cfg))
-        .withColumn("shingles", shingles_expr(F.col("__tokens"), cfg))
-        .drop("__tokens")
-    )
-
-
 def shingles_py(content: str, cfg: DedupConfig = DEFAULT_CONFIG) -> set[tuple[str, ...]]:
     """Pure-Python oracle for tests: the same tokenization, shingles as
     token tuples (unhashed — set semantics are what matter for exact
-    Jaccard; xxhash64 collisions are negligible at test scale)."""
+    Jaccard; hash collisions are negligible at test scale)."""
     import re
 
     toks = [t for t in re.split(cfg.token_pattern, content.lower()) if t]

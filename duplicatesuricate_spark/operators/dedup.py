@@ -143,6 +143,32 @@ def exact_dup_edges(
     return reps, edges
 
 
+def merge_pairs(
+    near: DataFrame, sub: DataFrame | None, exact_edges: DataFrame
+) -> DataFrame:
+    """Union the three pair channels into one row per canonical pair:
+    ``near`` (id_a, id_b, jaccard, hamming) from ``score_and_verify``,
+    ``sub`` (id_a, id_b) from the substring pass (``None`` when it is
+    off) and the exact pre-pass star ``exact_edges`` (id_a, id_b).  The
+    strongest channel wins for reporting: max ``jaccard``, min
+    ``hamming``, min ``kind`` (``exact`` < ``exact_substring`` <
+    ``near_dup``)."""
+    pairs = near.withColumn("kind", F.lit("near_dup"))
+    for df, kind in ((sub, "exact_substring"), (exact_edges, "exact")):
+        if df is not None:
+            pairs = pairs.unionByName(df.select(
+                "id_a", "id_b",
+                F.lit(1.0).alias("jaccard"),
+                F.lit(0).alias("hamming"),
+                F.lit(kind).alias("kind"),
+            ))
+    return pairs.groupBy("id_a", "id_b").agg(
+        F.max("jaccard").alias("jaccard"),
+        F.min("hamming").alias("hamming"),
+        F.min("kind").alias("kind"),
+    )
+
+
 def dedup_pipeline(
     corpus: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
@@ -222,11 +248,9 @@ def dedup_pipeline(
         simhash_block_explode(sketched, cfg)
     )
     cands = candidate_pairs(bands, cfg, cache_registry=owned)
-    near_pairs = score_and_verify(cands, sketched, cfg).withColumn(
-        "kind", F.lit("near_dup")
-    )
+    near_pairs = score_and_verify(cands, sketched, cfg)
 
-    pair_sets = [near_pairs]
+    sub = None
     if include_substring_pass:
         # candidates come from the persisted chunk table (rep ids only),
         # so verification can hydrate content from the RAW corpus — same
@@ -235,35 +259,10 @@ def dedup_pipeline(
         sub = exact_substring_pairs(
             corpus, cfg, chunk_table=sketched.select("doc_id", "chunks"),
             cache_registry=owned,
-        ).select(
-            "id_a", "id_b",
-            F.lit(1.0).alias("jaccard"),
-            F.lit(0).alias("hamming"),
-            F.lit("exact_substring").alias("kind"),
         )
-        pair_sets.append(sub)
-    exact = exact_edges.select(
-        "id_a", "id_b",
-        F.lit(1.0).alias("jaccard"),
-        F.lit(0).alias("hamming"),
-        F.lit("exact").alias("kind"),
-    )
-    pair_sets.append(exact)
-
-    all_pairs = pair_sets[0]
-    for p in pair_sets[1:]:
-        all_pairs = all_pairs.unionByName(p)
-    # one row per canonical pair; strongest channel wins for reporting.
     # Persisted: consumed by CC AND returned to the caller — without it the
     # whole candidate/score/substring DAG re-executes per downstream action.
-    all_pairs = (
-        all_pairs.groupBy("id_a", "id_b")
-        .agg(
-            F.max("jaccard").alias("jaccard"),
-            F.min("hamming").alias("hamming"),
-            F.min("kind").alias("kind"),
-        )
-    )
+    all_pairs = merge_pairs(near_pairs, sub, exact_edges)
     if persist:
         all_pairs = all_pairs.persist(persist_level())
         owned.append(all_pairs)

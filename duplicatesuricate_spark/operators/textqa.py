@@ -121,9 +121,10 @@ def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     md5 (not xxhash64) so DuckDB reproduces the exact value.  Short docs
     fingerprint their full token stream.
 
-    Tokens are materialized as a column before the per-gram lambda — see
-    ``with_shingles`` for why (lambda inlining makes the composed
-    expression quadratic per row)."""
+    Tokens are materialized as a column before the per-gram lambda:
+    Catalyst inlines expressions referenced inside higher-order-function
+    lambdas, so composing the tokenizer into the lambda would re-tokenize
+    the whole document once per gram (quadratic per row, interpreted)."""
     t = df.select(F.col(id_col), _toks(text_col).alias("toks"))
     toks = F.col("toks")
     n = F.size(toks)
@@ -486,7 +487,8 @@ def ngram_jaccard_pairs(
     )
     from pyspark.sql import Window
 
-    # tokens materialized before the lambda (see with_shingles)
+    # tokens materialized before the lambda: Catalyst inlines lambda-
+    # referenced expressions, so an inline tokenizer would re-run per gram
     t = ensure_min_partitions(df).select(
         F.col(id_col).alias("doc_id"), _toks(text_col).alias("toks")
     )

@@ -126,6 +126,11 @@ def run_dedup_checkpointed(
         candidates -> near_pairs/substring_pairs -> all_pairs ->
         assignments
 
+    Every stage calls what ``dedup_pipeline`` calls — the one sketch
+    kernel (with substring chunks), ``score_and_verify``, the chunk-table
+    substring pass and ``merge_pairs`` — so a checkpointed run emits the
+    batch run's pairs (all five columns) and assignments.
+
     Cache ownership: the internal DISK_ONLY tables ``candidate_pairs`` and
     ``exact_substring_pairs`` persist (band-bucket table, chunk-hash table)
     are collected in a local registry and released as soon as the stage
@@ -135,11 +140,11 @@ def run_dedup_checkpointed(
     """
     from duplicatesuricate_spark.functions.sketch import with_full_sketches
     from duplicatesuricate_spark.functions.util import ensure_min_partitions
-    from duplicatesuricate_spark.operators.dedup import exact_dup_map
+    from duplicatesuricate_spark.operators.dedup import exact_dup_map, merge_pairs
     from duplicatesuricate_spark.operators.lsh import (
         band_explode, candidate_pairs, simhash_block_explode,
     )
-    from duplicatesuricate_spark.operators.score import score_pairs, filter_dup_pairs
+    from duplicatesuricate_spark.operators.score import score_and_verify
     from duplicatesuricate_spark.operators.substring import exact_substring_pairs
     from duplicatesuricate_spark.operators.components import (
         connected_components, assignments_with_singletons,
@@ -152,8 +157,12 @@ def run_dedup_checkpointed(
     # config fields its output depends on.  corpus_ids / dup_map / reps /
     # exact_edges are config-independent (stamp ""), so changing a
     # threshold or the band geometry reuses them AND the sketch stage when
-    # the hash universe itself is unchanged.
-    universe = sketch_universe_fingerprint(cfg)
+    # the hash universe itself is unchanged.  The sketch table carries the
+    # substring chunks, so their geometry is part of its stamp.
+    stamp_sketch = input_sha(
+        "sketch", sketch_universe_fingerprint(cfg), cfg.substring_window,
+        cfg.substring_anchor_mod,
+    )
     stamp_cand = input_sha(
         "cand", cfg.bands, cfg.rows_per_band, cfg.simhash_blocks,
         cfg.hot_band_cap, cfg.mega_band_cap, cfg.seed,
@@ -163,8 +172,7 @@ def run_dedup_checkpointed(
         cfg.hamming_threshold, cfg.num_perms,
     )
     stamp_sub = input_sha(
-        "sub", universe, cfg.substring_window, cfg.substring_anchor_mod,
-        cfg.substring_min_chunks, cfg.substring_containment,
+        "sub", cfg.substring_min_chunks, cfg.substring_containment,
     )
     r = CheckpointRunner(spark, work_dir, snapshot_id)
     owned: list = []
@@ -197,10 +205,11 @@ def run_dedup_checkpointed(
         )
         sketches = r.stage(
             "sketches",
-            lambda: with_full_sketches(ensure_min_partitions(reps), cfg=cfg).select(
-                "doc_id", "shingles", "minhash", "simhash"
+            lambda: with_full_sketches(
+                ensure_min_partitions(reps), cfg=cfg, with_chunks=True,
+                project=["doc_id"],
             ),
-            stamp=universe,
+            stamp=stamp_sketch,
         )
         cands = r.stage(
             "candidates",
@@ -216,21 +225,21 @@ def run_dedup_checkpointed(
         drain()  # bucket table landed in the candidates parquet
         near = r.stage(
             "near_pairs",
-            lambda: filter_dup_pairs(score_pairs(cands, sketches, cfg), sketches, cfg),
+            lambda: score_and_verify(cands, sketches, cfg),
             stamp=stamp_near,
         )
         sub = r.stage(
             "substring_pairs",
-            lambda: exact_substring_pairs(reps, cfg, cache_registry=owned),
+            lambda: exact_substring_pairs(
+                reps, cfg, chunk_table=sketches.select("doc_id", "chunks"),
+                cache_registry=owned,
+            ),
             stamp=stamp_sub,
         )
         drain()  # chunk-hash table landed in the substring parquet
         all_pairs = r.stage(
             "all_pairs",
-            lambda: near.select("id_a", "id_b")
-            .unionByName(sub.select("id_a", "id_b"))
-            .unionByName(exact_edges.select("id_a", "id_b"))
-            .distinct(),
+            lambda: merge_pairs(near, sub, exact_edges),
             stamp="",
         )
         assignments = r.stage(

@@ -1,7 +1,7 @@
 """SparkSession factory.
 
-Single place to pin the execution config: Arrow on (all sketch kernels are
-Arrow-batched pandas UDFs), AQE on (skew-join splitting + partition
+Single place to pin the execution config: Arrow on (the sketch kernel is a
+``mapInArrow`` pass), AQE on (skew-join splitting + partition
 coalescing), shuffle partitions sized to the sandbox (local[32]) rather
 than the 200 default.  The reference had a bare ``SQLContext`` parameter
 threaded through its dead Spark path (duplicatesuricate/connectors.py:236,
@@ -14,6 +14,40 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Engine settings that are safe on any cluster: ``get_spark`` applies them
+# under its local-mode sizing, and the spark-submit job
+# (jobs/dedup_job.py) applies them on top of the launcher's conf.
+ENGINE_CONF = {
+    # AQE: runtime re-planning, skew-join splitting, partition coalescing
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # near-dup rows are tiny in bytes but expensive in compute (sketch
+    # kernel, array intersections): AQE's 1MB minimum partition size would
+    # coalesce post-shuffle stages down to a handful of tasks and cap
+    # parallelism; 64k keeps task counts at cluster width (irrelevant at
+    # real scale where shuffles exceed the floor)
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # runtime broadcast conversion: pair/candidate tables are usually tiny
+    # after filtering even when their pre-shuffle estimates are not — let
+    # AQE switch SMJ -> BHJ on observed sizes
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
+    # Arrow transfer for every Python kernel; bounded batches so a 128-int
+    # minhash column times a wide batch can't blow executor memory
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+    # near-dup workloads are compute-heavy per byte (tokenizing, sketching):
+    # split scans finer than the 128m default or a 150MB corpus reads as
+    # ~3 partitions and serializes the whole first stage
+    "spark.sql.files.maxPartitionBytes": "16m",
+    "spark.sql.files.openCostInBytes": "1m",
+    "spark.sql.session.timeZone": "UTC",
+    # propagate the malloc tuning (see get_spark) to executor-side Python
+    # workers on a real cluster (local mode inherits the driver env)
+    "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": "1073741824",
+    "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": "-1",
+}
+
 
 def get_spark(
     app_name: str = "duplicatesuricate_spark",
@@ -24,8 +58,9 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     ``cores=None`` -> ``local[*]``.  On a real cluster, ship the package with
-    ``spark-submit --py-files duplicatesuricate_spark.zip`` and drop the
-    ``master`` call — every other setting below is cluster-safe.
+    ``spark-submit --py-files duplicatesuricate_spark.zip`` and run
+    ``jobs/dedup_job.py``, which applies ``ENGINE_CONF`` on top of the
+    launcher's conf instead of this local-mode sizing.
     """
     # Large fresh allocations on this class of VM fault pages at ~40MB/s;
     # glibc returns mmap'd blocks (>128KB) to the OS on free, so every
@@ -71,32 +106,9 @@ def get_spark(
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        # shuffle sizing: ~2x cores locally; AQE coalesces the excess
+        .config(map=ENGINE_CONF)
+        # shuffle sizing: 1x cores locally; AQE coalesces the excess
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        # AQE: runtime re-planning, skew-join splitting, partition coalescing
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # near-dup rows are tiny in bytes but expensive in compute (sketch
-        # UDFs, array intersections): AQE's 1MB minimum partition size
-        # would coalesce post-shuffle stages down to a handful of tasks
-        # and cap parallelism; 64k keeps task counts at cluster width
-        # (irrelevant at real scale where shuffles exceed the floor)
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # runtime broadcast conversion: pair/candidate tables are usually
-        # tiny after filtering even when their pre-shuffle estimates are
-        # not — let AQE switch SMJ -> BHJ on observed sizes
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-        # Arrow transfer for every pandas UDF; bounded batches so a
-        # 128-int minhash column times a wide batch can't blow executor mem
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        # near-dup workloads are compute-heavy per byte (shingling, sketch
-        # UDFs): split scans finer than the 128m default or a 150MB corpus
-        # reads as ~3 partitions and serializes the whole first stage
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
         # pin initial == max heap AND pre-touch it: this VM services
@@ -126,10 +138,6 @@ def get_spark(
                 "-XX:+UseParallelGC -XX:+AlwaysPreTouch",
             ),
         )
-        # propagate the malloc tuning to executor-side Python workers on a
-        # real cluster (local mode inherits the driver env)
-        .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
-        .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
     )
     if local_dir:
         b = b.config("spark.local.dir", local_dir)

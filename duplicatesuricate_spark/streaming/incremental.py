@@ -47,9 +47,11 @@ def sketch_universe_fingerprint(cfg: DedupConfig) -> str:
     """Identity of the token/shingle/signature hash universe.
 
     Two sketch tables are comparable iff every constant below matches:
-    tokenizer mode (JVM xxhash64 vs in-kernel char hash and its version),
-    seed, permutation count, shingle width, band geometry.  Persisted
-    DedupState records this; ``incremental_dedup`` fails fast on mismatch
+    the kernel's token-hash version, seed, permutation count, shingle
+    width, band geometry, token pattern.  The literal
+    ``kernel_tokenize=True`` part has no knob behind it; it stays so
+    existing state dirs keep their fingerprint.  Persisted DedupState
+    records this; ``incremental_dedup`` fails fast on mismatch
     instead of silently producing ~0 Jaccard between old sketches and new
     deltas (round-2 advice, incremental.py:98)."""
     import hashlib
@@ -57,8 +59,8 @@ def sketch_universe_fingerprint(cfg: DedupConfig) -> str:
     from duplicatesuricate_spark.functions.sketch import KERNEL_VERSION
 
     parts = (
-        f"kernel_tokenize={cfg.kernel_tokenize}",
-        f"kernel_version={KERNEL_VERSION if cfg.kernel_tokenize else 'jvm-xxhash64'}",
+        "kernel_tokenize=True",
+        f"kernel_version={KERNEL_VERSION}",
         f"seed={cfg.seed}",
         f"num_perms={cfg.num_perms}",
         f"shingle_k={cfg.shingle_k}",
@@ -87,7 +89,7 @@ class DedupState:
                 raise ValueError(
                     f"dedup state at {self.dir} was sketched under universe "
                     f"{stored}, active config produces {fp} "
-                    "(kernel_tokenize / seed / num_perms / shingle_k / bands "
+                    "(seed / num_perms / shingle_k / bands / token_pattern "
                     "changed, or the kernel version was bumped). Re-sketch "
                     "the state or restore the original config — mixing "
                     "universes silently loses every cross-boundary near-dup."
@@ -150,8 +152,8 @@ def incremental_dedup(
 
     # delta: docs not yet processed (checkpoint-resume semantics).
     # MUST use the SAME fused sketch kernel as the batch pipeline
-    # (with_full_sketches): the batch path's shingle hashes are multiply-mix
-    # over per-token xxhash64 values, so sketching fresh docs any other way
+    # (with_full_sketches): its shingle hashes are multiply-mix over the
+    # kernel's own per-token char hashes, so sketching fresh docs any other way
     # would put state and delta in incompatible shingle universes (~0
     # Jaccard across the boundary — round-1 advice fix).
     fresh = new_corpus.join(old_sk.select("doc_id"), "doc_id", "left_anti")
@@ -199,9 +201,7 @@ def incremental_dedup(
     owned: list = [fresh_sk]
     cands = candidate_pairs(touched, cfg, cache_registry=owned)
     # fused estimate->prefilter->exact-verify (two hydration joins) — the
-    # same stage-B7 form the batch pipeline uses; the previous
-    # score_pairs + filter_dup_pairs pair hydrated the sketch table four
-    # times
+    # same stage-B7 scorer the batch pipeline uses
     new_pairs = score_and_verify(cands, all_sk, cfg)
 
     # previous components as star edges + new pairs -> re-converge

@@ -20,20 +20,12 @@ import time
 
 
 def engine_conf(builder):
-    """Engine-specific session settings, cluster-safe (see session.py for
-    the rationale of each)."""
-    return (
-        builder
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
-        .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
-    )
+    """Engine-specific session settings, cluster-safe: the same
+    ``ENGINE_CONF`` that ``get_spark`` applies (see session.py for the
+    rationale of each)."""
+    from duplicatesuricate_spark.session import ENGINE_CONF
+
+    return builder.config(map=ENGINE_CONF)
 
 
 def main() -> None:

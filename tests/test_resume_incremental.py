@@ -29,12 +29,30 @@ def _assign_pdf(df):
     )
 
 
+def _pairs_pdf(df):
+    return (
+        df.select("id_a", "id_b", "jaccard", "hamming", "kind")
+        .toPandas()
+        .sort_values(["id_a", "id_b"])
+        .reset_index(drop=True)
+    )
+
+
 def test_checkpointed_run_matches_in_memory_pipeline(spark, corpus, tmp_path_factory):
-    wd = str(tmp_path_factory.mktemp("ckpt_a"))
-    out = run_dedup_checkpointed(spark, corpus, wd)
-    a = _assign_pdf(out["assignments"])
-    b = _assign_pdf(dedup_pipeline(corpus).assignments)
-    assert a.equals(b)
+    """Checkpointed and batch runs emit the same pairs — all five columns,
+    row for row — and the same assignments, on the 80-row fixture and on
+    the 200-row synth corpus (whose substring links need the kernel's
+    chunk anchors on both paths)."""
+    pdf200, _ = synth_corpus(n_rows=200, seed=42)
+    corpus200 = with_doc_identity(spark.createDataFrame(pdf200))
+    for c in (corpus, corpus200):
+        wd = str(tmp_path_factory.mktemp("ckpt_a"))
+        out = run_dedup_checkpointed(spark, c, wd)
+        batch = dedup_pipeline(c)
+        pa, pb = _pairs_pdf(out["pairs"]), _pairs_pdf(batch.pairs)
+        assert len(pa) > 0 and pa.equals(pb)
+        assert _assign_pdf(out["assignments"]).equals(_assign_pdf(batch.assignments))
+        batch.unpersist()
     # metrics exist for every executed stage, with per-partition rows
     m = out["metrics"].toPandas()
     assert set(m["stage"]) >= {"sketches", "candidates", "assignments"}

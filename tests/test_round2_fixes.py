@@ -6,7 +6,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from duplicatesuricate_spark.config import DEFAULT_CONFIG
 from duplicatesuricate_spark.operators.components import connected_components
 from duplicatesuricate_spark.operators.similarity import (
     brute_force_topk,
@@ -218,27 +217,6 @@ def test_kernel_tokenizer_matches_python_oracle():
         got = [int(x) for x in flat[pos:pos + lens[i]]]
         pos += lens[i]
         assert got == tokenize_hash_py(s), f"doc {i}: {s[:40]!r}"
-
-
-def test_kernel_vs_jvm_tokenize_same_clusters(spark):
-    """The two tokenize modes hash into different universes but must
-    produce the SAME clusters on the golden corpus (the planted truth is
-    hash-agnostic)."""
-    from duplicatesuricate_spark.config import DEFAULT_CONFIG
-    from duplicatesuricate_spark.operators.dedup import dedup_pipeline
-    from duplicatesuricate_spark.sources.corpus import with_doc_identity
-    from duplicatesuricate_spark.sources.synth import synth_corpus
-
-    pdf, _ = synth_corpus(n_rows=120, seed=7)
-    corpus = with_doc_identity(spark.createDataFrame(pdf))
-
-    def clusters(cfg):
-        a = dedup_pipeline(corpus, cfg).assignments.toPandas()
-        return a.groupby("cluster_id")["doc_id"].apply(frozenset).tolist()
-
-    jvm = set(map(frozenset, clusters(DEFAULT_CONFIG.with_(kernel_tokenize=False))))
-    kern = set(map(frozenset, clusters(DEFAULT_CONFIG.with_(kernel_tokenize=True))))
-    assert jvm == kern
 
 
 # ------------------------------------------------ SparkML RF accuracy (A14)
